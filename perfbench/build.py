@@ -5,8 +5,12 @@ the benchmark harness with the Scala compiler that ships with Spark.
 
 Output goes to `.bench_build/classes-<hash>` at the repository root,
 keyed by a hash of every source file, so an unchanged tree is built
-once. Spark's jars are found through SPARK_HOME, else through the
-`unmanagedBase` line of the repository's build.sbt.
+once. The class directories of the last few trees are kept, so runs
+that alternate between trees in one checkout do not rebuild. The
+compile time in seconds is stored in the directory's `.ok` file; a cold
+compile takes about 50 s on a 4-vCPU VM. Spark's jars are found through
+SPARK_HOME, else through the `unmanagedBase` line of the repository's
+build.sbt.
 """
 import hashlib
 import os
@@ -14,11 +18,14 @@ import re
 import shutil
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 BUILD = ROOT / ".bench_build"
 HARNESS = Path(__file__).resolve().parent / "src"
+# Class directories kept, most recently used first.
+KEEP = 3
 
 # Module openings Spark needs on JDK 17 outside spark-submit (the list
 # build.sbt passes to forked runs).
@@ -70,11 +77,11 @@ def build() -> Path:
         h.update(f.read_bytes())
     out = BUILD / f"classes-{h.hexdigest()[:16]}"
     if (out / ".ok").is_file():
+        os.utime(out)
         return out
     BUILD.mkdir(parents=True, exist_ok=True)
-    for old in BUILD.glob("classes-*"):
-        shutil.rmtree(old, ignore_errors=True)
     tmp = out.with_name(out.name + ".tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
     tmp.mkdir(parents=True)
     argfile = BUILD / "scalac.args"
     argfile.write_text("\n".join(f'"{f}"' for f in files))
@@ -83,13 +90,25 @@ def build() -> Path:
     cp = os.pathsep.join(str(j) for j in sorted(jars.glob("*.jar")))
     cmd = ["java", "-XX:-UsePerfData", "-Xmx2g", "-Xss8m", "-cp", compiler, "scala.tools.nsc.Main",
            "-nowarn", "-d", str(tmp), "-classpath", cp, f"@{argfile}"]
+    t0 = time.monotonic()
     p = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
     if p.returncode != 0:
         shutil.rmtree(tmp, ignore_errors=True)
         raise BuildError("scalac failed:\n" + (p.stdout + p.stderr)[-4000:])
+    shutil.rmtree(out, ignore_errors=True)
     tmp.rename(out)
-    (out / ".ok").write_text("")
+    (out / ".ok").write_text(f"{time.monotonic() - t0:.1f}\n")
+    kept = sorted((d for d in BUILD.glob("classes-*") if (d / ".ok").is_file()),
+                  key=lambda d: d.stat().st_mtime, reverse=True)
+    for old in kept[KEEP:]:
+        shutil.rmtree(old, ignore_errors=True)
     return out
+
+
+def compile_seconds(classes: Path):
+    """Compile time of a class directory built by build(), if recorded."""
+    text = (classes / ".ok").read_text().strip()
+    return float(text) if text else None
 
 
 def _scala_version(jars: Path) -> str:

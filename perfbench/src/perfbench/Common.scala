@@ -72,13 +72,15 @@ object Host {
 
   /** Fixed-work probe: hash-reduce a constant range. Its wall time
     * moves with host conditions only, never with program changes. The
-    * first of two passes warms its code; the second is timed. */
+    * first of two passes warms its code; the second is timed. Each pass
+    * is a fresh Dataset, since running one Dataset again reuses its
+    * shuffle output and skips the hashing. */
   def calibrate(spark: SparkSession, cores: Int): Double = {
-    val q = spark.range(0L, 64000000L, 1L, cores)
+    def q() = spark.range(0L, 64000000L, 1L, cores)
       .select(xxhash64(col("id")).as("h")).agg(bit_xor(col("h")))
-    q.collect()
+    q().collect()
     val t0 = System.nanoTime()
-    q.collect()
+    q().collect()
     (System.nanoTime() - t0) / 1e9
   }
 
@@ -102,8 +104,8 @@ final case class Span(id: Long, parent: Long, name: String, start: Double, end: 
   *
   * Jobs are linked to the benchmark span that submitted them through a
   * local property set by the benchmark's own wrappers just before each
-  * action. Task metrics are summed per job, so per-operation figures
-  * come from the jobs an operation owns. */
+  * action. Task metrics are summed per job; per-operation figures come
+  * from the jobs that started within the operation. */
 final class Tracer(spark: SparkSession) {
   val SpanProperty = "perfbench.span"
 
@@ -200,6 +202,22 @@ final class Tracer(spark: SparkSession) {
   private def jobsOf(spanIds: Set[Long]): Seq[JobRec] =
     jobs.values.asScala.filter(r => spanIds.contains(r.span)).toSeq
 
+  /** Jobs that started within [start, end], whoever submitted them. */
+  private def jobsIn(start: Double, end: Double): Seq[JobRec] =
+    jobs.values.asScala.filter(r => r.start >= math.floor(start) && r.start <= end).toSeq
+
+  /** Jobs linked to any of `spanIds`. */
+  def jobCount(spanIds: Set[Long]): Int = jobsOf(spanIds).size
+
+  /** Executor run time, summed over the tasks of the jobs linked to
+    * span `id`, in milliseconds. */
+  def taskMs(id: Long): Double = jobsOf(Set(id)).map(_.runMs).sum.toDouble
+
+  /** Catalyst analysis, optimization and planning time of the actions
+    * that started within [start, end]. */
+  def planMs(start: Double, end: Double): Double =
+    phasesIn(start, end).map(p => p.analysis + p.optimization + p.planning).sum
+
   private def phasesIn(start: Double, end: Double): Seq[Phases] =
     phases.asScala.filter(p => p.start >= math.floor(start) && p.start <= end).toSeq
 
@@ -234,15 +252,15 @@ final class Tracer(spark: SparkSession) {
     }.toMap
   }
 
-  /** Spark and Catalyst figures per operation. Each op is (ids of the
-    * spans under it, start, end); jobs belong to an op through those
-    * spans, planning phases through the op's time window. */
-  def perOp(ops: Seq[(Set[Long], Double, Double)]): mutable.LinkedHashMap[String, Double] = {
+  /** Spark and Catalyst figures per operation. Each op is its (start,
+    * end); every job and planning phase that started in that window
+    * belongs to it, whether or not a benchmark span submitted it. */
+  def perOp(ops: Seq[(Double, Double)]): mutable.LinkedHashMap[String, Double] = {
     val n = ops.size.max(1).toDouble
-    val opJobs = ops.map { case (ids, s, e) => (jobsOf(ids), s, e) }
+    val opJobs = ops.map { case (s, e) => (jobsIn(s, e), s, e) }
     val js = opJobs.flatMap(_._1)
     val gaps = opJobs.map { case (j, s, e) => (e - s) - covered(j.map(x => (x.start, x.end)), s, e) }
-    val ph = ops.map { case (_, s, e) => phasesIn(s, e) }
+    val ph = ops.map { case (s, e) => phasesIn(s, e) }
     mutable.LinkedHashMap(
       "plan.analysis_ms" -> Stats.mean(ph.map(_.map(_.analysis).sum)),
       "plan.optimization_ms" -> Stats.mean(ph.map(_.map(_.optimization).sum)),

@@ -31,7 +31,7 @@ final class Dlt(ctx: Ctx) {
 
   /** One sink's view of one batch, from the benchmark's digest aggregate. */
   final case class SinkRes(rows: Long, bytes: Long, digest: Long, check: Long,
-      start: Double, end: Double, scanRows: Long) {
+      id: Long, start: Double, end: Double, scanRows: Long) {
     def ms: Double = end - start
   }
   final case class Expect(rows: Long, bytes: Long, digest: Long)
@@ -60,7 +60,7 @@ final class Dlt(ctx: Ctx) {
     val end = tracer.now()
     tracer.add(Span(id, opSpan, s"sink.${BranchNames(branch)}", start, end))
     def l(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-    results.put(branch, SinkRes(l(0), l(1), l(2), l(3), start, end,
+    results.put(branch, SinkRes(l(0), l(1), l(2), l(3), id, start, end,
       if (traceScans) Dlt.inMemoryScanRows(agg) else 0L))
   }
 
@@ -198,15 +198,16 @@ final class Dlt(ctx: Ctx) {
     }
     val r = setups.last._2
     val prepS = Stats.median(setups.map(_._1))
-    // Untimed batches on the kept query until timing starts: batch times
-    // keep falling over the first twenty or so batches of a JVM, and the
-    // first batches of a new query are slow.
+    // Host context, then untimed batches on the kept query until timing
+    // starts: batch times keep falling over the first twenty or so batches
+    // of a JVM, and the first batches of a new query are slow. The
+    // settling batches also absorb the calibration probe's effect on GC.
+    ctx.hostSnapshot("before")
     val w0 = System.nanoTime()
     (0 until Dlt.SettleBatches).foreach(_ => r.untimed += runOp(r))
     val settleS = (System.nanoTime() - w0) / 1e9
     val untimed = setups.flatMap(_._2.untimed)
     if (ctx.trace) return traced(r, untimed)
-    ctx.hostSnapshot("before")
     val ops = loop(r, ctx.seconds)
     ctx.hostSnapshot("after")
     stop(r)
@@ -225,7 +226,6 @@ final class Dlt(ctx: Ctx) {
   // ------------------------------------------------------------------
 
   private def traced(r: Running, untimed: Seq[Op]): Outcome = {
-    ctx.hostSnapshot("before")
     val (ops, plain) = loop(r, ctx.seconds, alternate = true).zipWithIndex
       .partition(_._2 % 2 == 1) match { case (a, b) => (a.map(_._1), b.map(_._1)) }
     tracer.enabled = false
@@ -248,21 +248,24 @@ final class Dlt(ctx: Ctx) {
       m(s"sink.$n.bytes") = Stats.mean(good.map(_.sinks.get(b).map(_.bytes.toDouble).getOrElse(0.0)))
     }
     val spans = tracer.allSpans ++ tracer.jobSpans
-    val byParent = spans.groupBy(_.parent)
-    def subtree(id: Long): Set[Long] = byParent.getOrElse(id, Nil).map(_.id).toSet.flatMap(subtree) + id
-    val opIds = good.map(o => o.span -> subtree(o.span)).toMap
-    m ++= tracer.perOp(good.map(o => (opIds(o.span), o.start, o.end)))
-    m("fanout.jobs_per_batch") = m("spark.jobs")
+    m ++= tracer.perOp(good.map(o => (o.start, o.end)))
+    val sinkQueries = good.flatMap(_.sinks.values)
+    m("fanout.jobs_per_batch") =
+      Stats.mean(good.map(o => tracer.jobCount(o.sinks.values.map(_.id).toSet).toDouble))
     m("fanout.scan_passes") =
       Stats.mean(good.map(o => o.sinks.values.map(_.scanRows).sum.toDouble / mix.records))
     val self = tracer.selfTimes(spans)
-    val spanById = spans.map(s => s.id -> s).toMap
     m("shell.process_batch_self_ms") = med(o => o.addBatch - o.sinks.values.map(_.ms).sum)
-    m("sink.driver_self_ms") = med(o => opIds(o.span).toSeq.flatMap(spanById.get)
-      .filter(_.name.startsWith("sink.")).map(s => self(s.id)).sum)
+    m("sink.driver_self_ms") = med(o => o.sinks.values.map(s => self(s.id)).sum)
+    // One sink query: its jobs, and its driver time outside those jobs and
+    // outside Catalyst's analysis, optimization and planning phases.
+    m("query.jobs") = Stats.mean(sinkQueries.map(s => tracer.jobCount(Set(s.id)).toDouble))
+    m("query.driver_gap_ms") = if (sinkQueries.isEmpty) 0.0
+      else Stats.median(sinkQueries.map(s => self(s.id) - tracer.planMs(s.start, s.end)))
     // Share of the batch wall time that the traced layers cover.
     m("trace.accounted_pct") = Stats.median(good.map(o => 100.0 * (1 - self(o.span) / o.wallMs)))
-    m ++= stageProbe(r.templates.head)
+    val (stages, probeOps, probeFailed) = stageProbe(r.templates.take(mix.probeTemplates))
+    m ++= stages
     m("codec.rand_lowercase_ns_per_byte") = Dlt.randLowercaseNsPerByte()
     val base = summary(plain)
     val tracedP50 = summary(ops)("batch_p50_ms")
@@ -277,41 +280,82 @@ final class Dlt(ctx: Ctx) {
     m("spark.speedup_vs_1core") = base("records_per_s") / rps1
     tracer.writeSpans(ctx.work.resolve("spans.jsonl"), spans)
     val all = plain ++ ops ++ ops1 ++ untimed ++ r1.untimed
-    Outcome(all.size, all.count(!_.ok), m, 0.0,
+    Outcome(all.size + probeOps, all.count(!_.ok) + probeFailed, m, 0.0,
       Map("batches_untraced" -> plain.size, "batches_traced" -> ops.size,
         "batches_1core" -> ops1.size, "records_per_s_untraced" -> base("records_per_s"),
         "digests" -> digests(r),
         "records_per_s_1core" -> rps1))
   }
 
-  /** Stage cost by materializing growing prefixes of the public stage
-    * functions over one persisted batch; each stage is the difference
-    * between the median times of two consecutive prefixes. */
-  private def stageProbe(t: Template): Map[String, Double] = {
-    val b = spark.createDataset(t.records.toSeq)(Encoders.product[KRec]).toDF()
+  /** A prefix of the stage functions, with the row count and the total
+    * of `check` the generator predicts for it. */
+  private final case class Prefix(name: String, df: DataFrame, check: Column, rows: Long,
+      total: Long)
+
+  /** Stage cost from growing prefixes of the public stage functions over
+    * the templates `ts` in one persisted batch. Each materialization
+    * builds a fresh Dataset: running one Dataset again reuses its shuffle
+    * output and skips the stage work. After a warm-up round, rounds run
+    * every prefix in turn, each round starting one prefix later, so no
+    * prefix always runs first. A stage's cost is the difference between
+    * the median executor run times of two consecutive prefixes. Every
+    * materialization is checked against the generator. Returns the
+    * metrics, the checks made and the checks failed. */
+  private def stageProbe(ts: Seq[Template]): (Map[String, Double], Int, Int) = {
+    val records = ts.flatMap(_.records)
+    val b = spark.createDataset(records)(Encoders.product[KRec]).toDF()
       .repartition(ctx.cores).persist()
     b.count()
+    val ints = records.collect { case x if x.value != null && x.value.length == 4 =>
+      java.nio.ByteBuffer.wrap(x.value).getInt.toLong }
+    val lens = ints.filter(_ >= 0).sum
+    val tombstones = records.count(_.value == null)
+    val out = ts.flatMap(_.preds).filter(_.branch == Output)
     val decoded = ErrorChannel.safeDecode(b)
     val mapped = ErrorChannel.wrapMap(ErrorChannel.decodeOk(decoded))
     val split = ErrorChannel.toOutput(ErrorChannel.okBranch(mapped))
     val guarded = ErrorChannel.sizeOk(split, MaxRequestSize)
-    val prefixes = Seq("scan" -> b, "decode" -> decoded, "map" -> mapped,
-      "split" -> split, "guard" -> guarded)
-    val times = prefixes.map { case (n, df) =>
-      val w = Dlt.weigh(df)
-      w.collect()
-      n -> Stats.median((1 to 3).map { _ =>
-        val t0 = System.nanoTime(); w.collect(); (System.nanoTime() - t0) / 1e6
-      })
+    val prefixes = Seq(
+      Prefix("scan", b, octet_length(col("value")), records.size,
+        records.map(x => Option(x.value).fold(0L)(_.length)).sum),
+      Prefix("decode", decoded, col("value_int"), records.size, ints.sum),
+      Prefix("map", mapped, octet_length(col("wrapper.mappedValue")), ints.size + tombstones, lens),
+      Prefix("split", split, octet_length(col("value")), ints.count(_ >= 0) + tombstones, lens),
+      Prefix("guard", guarded, octet_length(col("value")), out.size, out.map(_.vlen.max(0).toLong).sum))
+    var failed = 0
+    def once(p: Prefix): Long = {
+      val id = tracer.newId()
+      val row = tracer.within(id)(Dlt.weigh(p.df, p.check).collect().head)
+      val total = if (row.isNullAt(2)) 0L else row.getLong(2)
+      if (row.getLong(0) != p.rows || total != p.total) {
+        System.err.println(s"[perfbench] stage ${p.name}: ${row.getLong(0)} rows, total $total; " +
+          s"expected ${p.rows}, ${p.total}")
+        failed += 1
+      }
+      id
     }
+    prefixes.foreach(once)
+    val n = prefixes.size
+    val rounds = (0 until Dlt.StageRounds).map { k =>
+      val ids = new Array[Long](n)
+      (0 until n).map(j => (j + k) % n).foreach(i => ids(i) = once(prefixes(i)))
+      ids.toSeq
+    }
+    tracer.drain()
     b.unpersist(blocking = true)
-    times.sliding(2).map { case Seq((_, a), (n, c)) => s"stage.${n}_ms" -> (c - a) }.toMap
+    val ms = prefixes.indices.map(i => Stats.median(rounds.map(r => tracer.taskMs(r(i)))))
+    val names = prefixes.map(_.name)
+    val stages = (1 until n).map(i => s"stage.${names(i)}_ms" -> (ms(i) - ms(i - 1)))
+    val totals = (0 until n).map(i => s"stage_prefix_task_ms.${names(i)}" -> ms(i))
+    ((stages ++ totals).toMap, n * (Dlt.StageRounds + 1), failed)
   }
 }
 
 object Dlt {
   /** Untimed batches on the kept query before timing starts. */
   val SettleBatches = 12
+  /** Timed rounds of the stage probe. */
+  val StageRounds = 5
 
   /** Rows read from cached batches by a plan's in-memory scans. */
   def inMemoryScanRows(df: DataFrame): Long = {
@@ -327,8 +371,8 @@ object Dlt {
 
   /** Materialize every column at O(1) cost per value: lengths for
     * strings and binaries, so a generated payload must be produced but
-    * is not hashed. */
-  def weigh(df: DataFrame): DataFrame = {
+    * is not hashed. Also sums `check`. */
+  def weigh(df: DataFrame, check: Column): DataFrame = {
     def sizes(c: Column, t: DataType): Seq[Column] = t match {
       case StringType | BinaryType => Seq(coalesce(octet_length(c), lit(0)).cast(LongType))
       case s: StructType => s.fields.toSeq.flatMap(f => sizes(c.getField(f.name), f.dataType))
@@ -337,7 +381,7 @@ object Dlt {
       case _ => Seq(when(c.isNull, 0L).otherwise(1L))
     }
     val parts = df.schema.fields.toSeq.flatMap(f => sizes(col(f.name), f.dataType))
-    df.agg(count(lit(1)), sum(parts.reduce(_ + _)))
+    df.agg(count(lit(1)), sum(parts.reduce(_ + _)), sum(check).cast(LongType))
   }
 
   /** `GraftExprs.randLowercase` throughput on the driver thread. */

@@ -40,10 +40,11 @@ object DltGen {
       s"$MaxRequestSize, which is the value of the max.request.size configuration."
 
   /** Record mix of one workload. `validLen(rng, j, valid)` draws the
-    * length of the j-th of `valid` valid records. */
+    * length of the j-th of `valid` valid records. The stage probe runs
+    * over the first `probeTemplates` templates. */
   final case class Mix(name: String, records: Int, valid: Int, negative: Int,
       deser: Int, tombstones: Int, headerShare: Double,
-      validLen: (SplittableRandom, Int, Int) => Int, templates: Int) {
+      validLen: (SplittableRandom, Int, Int) => Int, templates: Int, probeTemplates: Int) {
     require(valid + negative + deser + tombstones == records)
   }
 
@@ -51,7 +52,7 @@ object DltGen {
   private val Hi = math.log(4 * 1024 * 1024.0)
 
   val small = Mix("dlt_small", 20000, 16000, 2000, 1800, 200, 0.10,
-    (r, _, _) => r.nextInt(256), templates = 8)
+    (r, _, _) => r.nextInt(256), templates = 8, probeTemplates = 8)
 
   /** Log-uniform lengths in [64 KiB, 4 MiB), stratified so every batch
     * spans the whole range: about a third exceed the 1 MiB limit. Each
@@ -59,7 +60,7 @@ object DltGen {
   val large = Mix("dlt_large", 32, 28, 2, 2, 0, 0.10,
     (r, j, v) => math.exp(Lo + (j + r.nextDouble()) / v * (Hi - Lo)).toLong
       .min(4L * 1024 * 1024 - 1).toInt,
-    templates = 24)
+    templates = 24, probeTemplates = 2)
 
   def mix(workload: String): Mix = workload match {
     case "dlt_small" => small

@@ -34,13 +34,11 @@ final case class Outcome(attempted: Int, failed: Int, metrics: collection.Map[St
 
 /** Entry point of the benchmark JVM.
   *
-  * `--workload <dlt_small|dlt_large|query_mix> --seed <n> --seconds <s>
+  * `--workload <dlt_small|dlt_large> --seed <n> --seconds <s>
   * --trace <0|1> --work <dir>` runs one workload and prints one line
   * `PERFBENCH_RESULT <json>`; `--selftest` checks the generator and the
   * percentile rule without starting Spark. */
 object Main {
-  val Workloads = Seq("dlt_small", "dlt_large", "query_mix")
-
   val PerLayer: Seq[String] = Seq(
     "shell.trigger_ms", "shell.add_batch_ms", "shell.overhead_ms", "shell.wait_ms",
     "shell.process_batch_self_ms", "source.add_data_ms") ++
@@ -76,28 +74,28 @@ object Main {
     val opts = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     if (args.contains("--selftest")) { selftest(); return }
     val workload = opts("workload")
-    require(Workloads.contains(workload), s"unknown workload $workload")
     val work = Paths.get(opts("work")).toAbsolutePath
     Files.createDirectories(work)
-    val cores = opts.get("cores").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+    val cores = Runtime.getRuntime.availableProcessors
     val spark = session(cores, work)
     val sessionS = (System.currentTimeMillis() - Host.processStartMs()) / 1e3
     val ctx = new Ctx(spark, workload, opts("seed").toLong, opts("seconds").toDouble,
       opts("trace") == "1", cores, work)
-    val out =
-      if (workload == "query_mix") new QueryMix(ctx).run() else new Dlt(ctx).run()
+    val out = new Dlt(ctx).run()
     val active = SparkSession.getActiveSession.getOrElse(spark)
     val metrics = mutable.LinkedHashMap[String, Double]()
     if (ctx.trace) {
       val m = out.metrics + ("jvm.heap_peak_mb" -> Host.heapPeakMb())
-      PerLayer.foreach(n => metrics(n) = m.getOrElse(n, 0.0))
+      PerLayer.foreach { n =>
+        metrics(n) = m.getOrElse(n, throw new IllegalStateException(s"no value for $n"))
+      }
     } else {
       metrics("setup_s") = sessionS + out.prepS
       metrics ++= out.metrics
     }
     val record = mutable.LinkedHashMap[String, Any](
       "workload" -> workload, "seed" -> ctx.seed, "seconds" -> ctx.seconds,
-      "trace" -> ctx.trace, "cores" -> cores, "nproc" -> Runtime.getRuntime.availableProcessors,
+      "trace" -> ctx.trace, "nproc" -> cores,
       "heap_max_mb" -> Runtime.getRuntime.maxMemory / 1048576,
       "session_s" -> sessionS, "prep_s" -> out.prepS,
       "failed_ops_ratio" -> out.failed.toDouble / out.attempted.max(1)) ++ ctx.host ++

@@ -16,7 +16,6 @@ HERE = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(HERE))
 sys.dont_write_bytecode = True
 import build  # noqa: E402
-import run  # noqa: E402
 
 ROOT = build.ROOT
 # Never used while the benchmark was tuned.
@@ -51,8 +50,8 @@ class PerfbenchTest(unittest.TestCase):
         return json.loads(p.stdout.strip().splitlines()[-1])
 
     def test_held_out_seed_runs_clean_with_declared_metrics(self):
-        for w in [x["name"] for x in self.spec["workloads"]] + list(run.EXTRA):
-            e2e = run.EXTRA.get(w) or {m["name"]: m["unit"] for m in self.spec["end_to_end"]}
+        e2e = {m["name"]: m["unit"] for m in self.spec["end_to_end"]}
+        for w in [x["name"] for x in self.spec["workloads"]]:
             with self.subTest(workload=w):
                 res = self._last_line(run_bench(w, HELD_OUT_SEED, 3, 0))
                 self.assertEqual(set(res), {"correct", "attempted", "failed", "metrics"})
@@ -67,7 +66,15 @@ class PerfbenchTest(unittest.TestCase):
         res = self._last_line(run_bench("dlt_small", HELD_OUT_SEED, 4, 1))
         self.assertTrue(res["correct"])
         self.assertEqual({k: v["unit"] for k, v in res["metrics"].items()}, layer)
-        self.assertAlmostEqual(res["metrics"]["fanout.scan_passes"]["value"], 4.0, delta=1.0)
+        m = {k: v["value"] for k, v in res["metrics"].items()}
+        self.assertAlmostEqual(m["fanout.scan_passes"], 4.0, delta=1.0)
+        # Each sink query runs at least one job, and the streaming shell
+        # runs none outside the sinks.
+        self.assertGreaterEqual(m["query.jobs"], 1.0)
+        self.assertAlmostEqual(m["fanout.jobs_per_batch"], 4 * m["query.jobs"], delta=0.01)
+        self.assertGreaterEqual(m["spark.jobs"], m["fanout.jobs_per_batch"])
+        # Generating the strings costs task time.
+        self.assertGreater(m["stage.map_ms"], 0.0)
 
     def test_fails_without_the_program(self):
         bare = build.BUILD / "bare-checkout"
