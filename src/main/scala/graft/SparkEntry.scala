@@ -15,7 +15,8 @@ object SparkEntry {
     * binary wire (key = event_id UTF-8, value = 4-byte big-endian int;
     * 'error'-typed events get undecodable bytes to exercise the
     * deserialization DLT; negative lengths exercise the process DLT),
-    * then routed through decode → wrap-map → split → size guard.
+    * then routed by the topology's `branchTag` (decode → split → size
+    * guard on the decoded length).
     * Returns per-branch record counts (rows > 0 always). */
   def entry(spark: SparkSession): DataFrame = {
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -26,10 +27,9 @@ object SparkEntry {
           codecs.be_int4_encode(lit(-1)))
         .otherwise(codecs.be_int4_encode(
           floor(least(col("value"), lit(64.0))).cast("int"))).as("value"))
-    // One pass: branchTag labels each record with its route through the
-    // SAME stage predicates as the four-branch topology, so the flagship
-    // reads its input once (the round-1 union-of-branches shape scanned
-    // the source 4x — ErrorHandlingTopologySpec pins the equivalence).
+    // One pass: branchTag is the topology's routing, so the flagship
+    // reads its input once and generates no payload (the round-1
+    // union-of-branches shape scanned the source 4x).
     ErrorHandlingTopology.branchTag(records)
       .groupBy("branch").agg(count(lit(1)).as("n"))
   }

@@ -174,9 +174,23 @@ object TextNative {
     * (JobProfile dd_winnow_pairs). Null elements are skipped like
     * array_min does; an all-null window selects nothing (the HOF's
     * array_max-over-empty → null → filtered). Parity incl. null and
-    * short-doc cases pinned in TextNativeSpec. */
+    * short-doc cases pinned in TextNativeSpec.
+    *
+    * Every non-null hash must lie in [0, 2³¹) (shingle_hashes emits
+    * values mod a 31-bit prime): outside it the packing would silently
+    * mix position and fingerprint, and [[packedLow31]] would return
+    * wrong fingerprints. Such input fails the task instead. */
   def winnowSelect(hv: ArrayData, w: Int): ArrayData = {
     val n = hv.numElements()
+    var k = 0
+    while (k < n) {
+      if (!hv.isNullAt(k)) {
+        val v = hv.getLong(k)
+        if (v < 0L || v >= 2147483648L) throw new IllegalArgumentException(
+          s"winnow_select: hash $v at index $k is outside [0, 2^31)")
+      }
+      k += 1
+    }
     val upTo = math.max(n - (w - 1), 1)
     val out = new scala.collection.mutable.ArrayBuffer[Any]()
     val seen = new java.util.HashSet[java.lang.Long]()
@@ -216,7 +230,9 @@ object TextNative {
     * winnow path. Null elements dropped like array_distinct keeps
     * them... (they cannot occur: winnow_select emits non-null), but
     * mirrored exactly anyway: a null element maps to null and
-    * array_distinct KEEPS one null — so does this. */
+    * array_distinct KEEPS one null — so does this. Its input is
+    * winnow_select output, whose fingerprints [[winnowSelect]] has
+    * bound-checked to [0, 2³¹). */
   def packedLow31(sel: ArrayData): ArrayData = {
     val n = sel.numElements()
     val out = new scala.collection.mutable.ArrayBuffer[Any]()

@@ -13,10 +13,16 @@ import graft.functions.codecs
   * topology through an injectable `StreamsBuilder`
   * (reference: .../topology/ErrorHandlingTopology.java:27-44).
   *
+  * Routing is decided once, in `ErrorHandlingTopology.branchTag`, from
+  * the decoded length `n` and the key alone ([[outputRecordSize]]); the
+  * per-branch projections here then run on the records of one branch,
+  * so `rand_lowercase` only ever runs for records that reach the output
+  * topic.
+  *
   * All stages are narrow (no shuffle): at 100 TB the whole error-channel
   * pipeline is a single map stage over the source partitions — the scan
   * partitioning is carried through untouched, and whole-stage codegen
-  * fuses decode→map→branch→project into one loop per partition.
+  * fuses decode→route→project into one loop per partition.
   */
 object ErrorChannel {
 
@@ -78,9 +84,12 @@ object ErrorChannel {
     * bytes pass through untouched + diagnostic header
     * (reference contract SURVEY.md §2.3-5). */
   def deserFailures(decoded: DataFrame): DataFrame =
-    withErrorHeader(
-      decoded.filter(col("value").isNotNull && col("value_int").isNull),
-      lit(IntegerDeserError))
+    toDeserDlt(decoded.filter(col("value").isNotNull && col("value_int").isNull))
+
+  /** Deserialization-DLT projection of records already known to be
+    * undecodable. */
+  def toDeserDlt(failures: DataFrame): DataFrame =
+    withErrorHeader(failures, lit(IntegerDeserError))
       .select(col("key"), col("value"), col("headers"))
 
   /** Records that decoded (or were null tombstones, which Kafka's
@@ -104,18 +113,14 @@ object ErrorChannel {
   def wrapMap(decoded: DataFrame): DataFrame = {
     val n = col("value_int")
     val seed = xxhash64(col("key"), n)
-    decoded.withColumn("wrapper",
-      when(n >= 0,
-        struct(
-          n.as("originalValue"),
-          codecs.rand_lowercase(seed, n).as("mappedValue"),
-          lit(null).cast(StringType).as("error")))
-      .otherwise(
-        struct(
-          n.as("originalValue"),
-          lit(null).cast(StringType).as("mappedValue"),
-          concat(lit("java.lang.IllegalArgumentException: "),
-                 n.cast(StringType)).as("error"))))
+    // One `when` per field rather than one per struct: a consumer that
+    // reads only `error` / `originalValue` (the process DLT, the split
+    // predicate) then optimizes to a plan without `rand_lowercase`.
+    decoded.withColumn("wrapper", struct(
+      n.as("originalValue"),
+      when(n >= 0, codecs.rand_lowercase(seed, n)).as("mappedValue"),
+      when(n < 0, concat(lit("java.lang.IllegalArgumentException: "),
+                         n.cast(StringType))).as("error")))
   }
 
   // ---------------------------------------------------------------------
@@ -124,9 +129,6 @@ object ErrorChannel {
 
   /** `hasError` predicate (reference: MessageWrapper.java:5-7). */
   def hasError: Column = col("wrapper.error").isNotNull
-
-  /** Error branch (reference: ErrorHandlingTopology.java:32-37). */
-  def errorBranch(mapped: DataFrame): DataFrame = mapped.filter(hasError)
 
   /** Default branch (reference: ErrorHandlingTopology.java:42-44). */
   def okBranch(mapped: DataFrame): DataFrame = mapped.filter(!hasError)
@@ -171,6 +173,15 @@ object ErrorChannel {
     coalesce(octet_length(col("value")), lit(0)) +
       coalesce(octet_length(col("key")), lit(0)) + lit(RecordOverheadBytes)
 
+  /** [[recordSize]] of the output record a decoded row WOULD become,
+    * computed before its value is generated: the mapped value is `n`
+    * characters of [a-z], so its UTF-8 length is `n` (a tombstone's null
+    * value counts 0). A Long, so `n` near `Int.MaxValue` cannot wrap
+    * below the limit. */
+  def outputRecordSize: Column =
+    coalesce(col("value_int"), lit(0)).cast(LongType) +
+      coalesce(octet_length(col("key")), lit(0)) + lit(RecordOverheadBytes.toLong)
+
   /** Records that fit under `maxRequestSize`. */
   def sizeOk(outRecords: DataFrame, maxRequestSize: Int = DefaultMaxRequestSize): DataFrame =
     outRecords.filter(recordSize(outRecords) <= maxRequestSize)
@@ -184,8 +195,15 @@ object ErrorChannel {
   def toProductionDlt(outRecords: DataFrame,
                       maxRequestSize: Int = DefaultMaxRequestSize): DataFrame = {
     val oversized = outRecords.filter(recordSize(outRecords) > maxRequestSize)
+    oversizedToDlt(oversized, recordSize(oversized), maxRequestSize)
+  }
+
+  /** Production-DLT projection of records already known to exceed
+    * `maxRequestSize`; `size` is the record size the message reports. */
+  def oversizedToDlt(oversized: DataFrame, size: Column,
+                     maxRequestSize: Int = DefaultMaxRequestSize): DataFrame = {
     val msg = concat(
-      lit("The message is "), recordSize(oversized).cast(StringType),
+      lit("The message is "), size.cast(StringType),
       lit(" bytes when serialized which is larger than "),
       lit(maxRequestSize.toString),
       lit(", which is the value of the max.request.size configuration."))

@@ -212,7 +212,15 @@ object StoreMaintenance {
     * count() job plus the filter aggregation; the observed count
     * removes the count() job from every fold. Same sidecar bytes:
     * one id per docs row, so the observed row count equals the old
-    * `ids.count()` exactly. */
+    * `ids.count()` exactly.
+    *
+    * Precondition: `docs` must be checkpointed (or otherwise recompute
+    * to the same rows), because the sidecar is built by a SECOND pass
+    * over `docs` after the parquet write. A non-deterministic input
+    * would get a bloom that misses ids present in the segment, and a
+    * wrong sidecar (unlike a missing or corrupt one, which falls back
+    * to the exact scan) silently admits redelivered duplicates. Every
+    * caller passes a localCheckpoint'd frame. */
   private def writeDocsWithBloom(docs: DataFrame, idCol: String,
                                  dir: String): Unit = {
     val obs = org.apache.spark.sql.Observation()

@@ -171,4 +171,23 @@ class TextNativeSpec extends AnyFunSuite {
     // every fixture phrase actually changed (the corruption is real)
     fixtures.foreach { case (c, p) => assert(c != p) }
   }
+
+  test("winnow_select fails loudly on hashes outside [0, 2^31)") {
+    for (bad <- Seq(-1L, 2147483648L)) {
+      val df = Seq((0L, Seq(3L, bad, 5L, 7L))).toDF("id", "hv")
+      val e = intercept[Exception] {
+        df.select(graft.functions.textNative.winnow_select(col("hv"), 2)).collect()
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(s"hash $bad at index 1 is outside [0, 2^31)")), e.toString)
+    }
+    // the largest in-range hash still packs and unpacks exactly
+    val top = 2147483647L
+    val sel = Seq((0L, Seq(top))).toDF("id", "hv")
+      .select(graft.functions.textNative.winnow_select(col("hv"), 2).as("sel"))
+    assert(sel.collect().head.getSeq[Long](0) == Seq(2147483648L + top))
+    assert(sel.select(graft.functions.textNative.packed_low31(col("sel")))
+      .collect().head.getSeq[Long](0) == Seq(top))
+  }
 }
